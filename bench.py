@@ -1,13 +1,15 @@
 """Benchmark harness: index-build throughput + top-k query latency.
 
 Runs at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] (default 32) and prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default: every usable core, as nproc counts them)
+and prints ONE JSON line:
   {"metric": ..., "value": <total sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": ..., "build_docs_per_sec": ...}
 
 The build is the full write path (tokenize -> explode -> salted term shuffle ->
 block/FOR-vByte encode -> segment parquet + snapshot commit); queries run the
-float32 Lucene-parity path with block-max pruning through applyInPandas.
+float32 Lucene-parity path with block-max pruning, one mapInPandas task per
+slice of live segments.
 """
 
 from __future__ import annotations
@@ -56,7 +58,8 @@ BENCH_QUERIES = {
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
 

@@ -475,14 +475,14 @@ def execute_merge(spark: SparkSession, index_dir: str, segment_ids: list[int],
             osts, olns = [], []
             has_pos = True
             has_pay = False
-            has_off = False
+            off_seen = set()  # offsets-channel presence per positional input
             for r in g.itertuples():
                 blocks = [b if isinstance(b, dict) else b.asDict()
                           for b in r.blocks]
                 if blocks and blocks[0].get("pos_bytes"):
                     # payloads and offsets ride the positions channel through
                     # the merge (SegmentMerger carries .pay alongside .pos);
-                    # absent channels decode as zeros so mixed inputs stay
+                    # absent payloads decode as zeros so mixed inputs stay
                     # aligned
                     d, f, n, flat, fpay, fos, foe = decode_blocks(
                         blocks, want_positions=True, want_payloads=True,
@@ -493,8 +493,13 @@ def execute_merge(spark: SparkSession, index_dir: str, segment_ids: list[int],
                     olnlists = split_positions(foe - fos, f)
                     if blocks[0].get("pay_bytes"):
                         has_pay = True
-                    if blocks[0].get("off_bytes"):
-                        has_off = True
+                    off_seen.add(bool(blocks[0].get("off_bytes")))
+                    if len(off_seen) > 1:
+                        # absent offsets decode as zeros, which the merged
+                        # segment would store as real (0, 0) offsets
+                        raise ValueError(
+                            f"cannot merge term {term!r}: some segments "
+                            "store an offsets channel and some do not")
                 else:
                     d, f, n = decode_blocks(blocks)
                     plists = paylists = ostlists = olnlists = None
@@ -530,7 +535,8 @@ def execute_merge(spark: SparkSession, index_dir: str, segment_ids: list[int],
             blocks = encode_posting_list(
                 docids, freqs, norms, positions, codec=codec,
                 payloads=pays if (has_pos and has_pay) else None,
-                offsets=(osts, olns) if (has_pos and has_off) else None)
+                offsets=(osts, olns) if (has_pos and off_seen == {True})
+                else None)
             rows.append({
                 "segment_id": new_id, "term": term,
                 "df": int(docids.size), "ttf": int(freqs.sum()),

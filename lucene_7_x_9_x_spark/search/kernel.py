@@ -1129,11 +1129,15 @@ class Scorer:
         out = np.flatnonzero(acc > 0)
         return out, acc[out].astype(np.float64)
 
-    def _near_2term_stream(self, cand: np.ndarray, tA: str, tB: str,
+    def _near_2term_stream(self, cand: np.ndarray,
+                           tA: str | tuple[str, ...],
+                           tB: str | tuple[str, ...],
                            slop: int, in_order: bool):
         """Vectorized NearSpans emissions (docs, starts, ends, widths) for
-        the dominant 2-distinct-term shape, in the faithful matchers'
-        per-doc emission order, docs ascending.
+        the dominant 2-clause shape, in the faithful matchers' per-doc
+        emission order, docs ascending. Each clause is a term or a tuple of
+        terms (a SpanOr over term leaves): a tuple walks the key-sorted
+        merged stream of its members (_group_flat_positions).
 
         Both per-doc algorithms collapse to closed forms over the two sorted
         position streams (proof: exhaustive + randomized differential tests
@@ -1199,10 +1203,14 @@ class Scorer:
 
     span_near_kterm_vectorized = True  # k>=3 term clauses, no per-doc Python
 
-    def _near_kterm_stream(self, cand: np.ndarray, terms, slop: int,
+    def _near_kterm_stream(self, cand: np.ndarray,
+                           terms: list[str | tuple[str, ...]], slop: int,
                            in_order: bool):
         """Vectorized NearSpans emissions (docs, starts, ends, widths) for
-        k >= 3 distinct single-term clauses, per-doc emission order.
+        k >= 3 clauses, per-doc emission order. Each entry of `terms` is one
+        clause: a term, or a tuple of terms (a SpanOr over term leaves) whose
+        members walk as one key-sorted merged stream
+        (_group_flat_positions).
 
         ORDERED (NearSpansOrdered.java:60-121): the later clauses' pointers
         are monotone and every per-clause constraint start >= prev_end is

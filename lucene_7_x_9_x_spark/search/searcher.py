@@ -3,16 +3,19 @@
 Retrace of IndexSearcher.search (SURVEY §3.2): query AST -> fixpoint rewrite
 (multi-term nodes expand against the term dictionary WITH DataFrame predicates,
 never a doc scan) -> global stats resolution (df summed over segments, exactly as
-TermStates aggregates over leaves, TermQuery.java:140-141) -> partition-pruned
-postings scan for the query terms -> per-segment vectorized kernel via
-applyInPandas (the analog of per-leaf bulkScorer slices, IndexSearcher.java:221-296)
--> driver-side TopDocs.merge with (score desc, segment order, docid) tie-break
+TermStates aggregates over leaves, TermQuery.java:140-141) -> per-segment
+vectorized kernel mapped over the live segments with mapInPandas (the analog of
+per-leaf bulkScorer slices, IndexSearcher.java:221-296) -> driver-side
+TopDocs.merge with (score desc, segment order, docid) tie-break
 (TopDocs.java:80-83).
 
-Scale shape: the postings scan pushes `term IN (...)` + live-(wave,segment)
-filters into parquet (partition + row-group pruning); the only data that crosses
-the wire is the query terms' posting rows, grouped per segment; the driver
-receives <= k rows per segment.
+Scale shape: a warm query is ONE shuffle-free Spark job. The map runs over a
+small local table of live (segment_id, wave) rows; each task reads its own
+segments' posting rows for the query terms with pyarrow (`term in ...`,
+row groups pruned by the term sort), runs the kernel and reads the keys of its
+<= k winners from the segment's docs file. First-seen terms add one JVM-only
+scan for their df/ttf, summed on the driver. The driver receives <= k rows
+per segment.
 """
 
 from __future__ import annotations
@@ -74,13 +77,14 @@ def _make_stats(stats_args: dict):
         return K.PerFieldStats(by_field, base)
     return base
 
-_KERNEL_OUT = T.StructType(
+_HIT_OUT = T.StructType(
     [
         T.StructField("segment_id", T.IntegerType(), False),
         T.StructField("docid", T.IntegerType(), False),
         T.StructField("score", T.DoubleType(), False),
         T.StructField("hits", T.LongType(), False),
         T.StructField("exact", T.BooleanType(), False),
+        T.StructField("key", T.StringType(), True),
     ]
 )
 
@@ -88,6 +92,14 @@ _MATCH_OUT = T.StructType(
     [
         T.StructField("segment_id", T.IntegerType(), False),
         T.StructField("docid", T.IntegerType(), False),
+    ]
+)
+
+_SCORE_OUT = T.StructType(
+    [
+        T.StructField("segment_id", T.IntegerType(), False),
+        T.StructField("docid", T.IntegerType(), False),
+        T.StructField("score", T.DoubleType(), False),
     ]
 )
 
@@ -100,68 +112,74 @@ class TopDocs:
     total_hits_exact: bool
 
 
-def _make_segment_index(pdf: pd.DataFrame, seg_id: int, seg_meta, del_spec,
-                        norms_ctx) -> "K.SegmentIndex":
-    """Task-side SegmentIndex over one segment's scanned posting rows.
+def _segment_dir(index_dir: str, root: str, wave: int,
+                 segment_id: int) -> str:
+    return os.path.join(index_dir, root, f"wave={int(wave)}",
+                        f"segment_id={int(segment_id)}")
 
-    Deletes are read task-locally for THIS segment only (the .liv analog —
-    del_spec carries just gen lists + which-segments flags, never docid
-    arrays; index/livedocs.py). Full-field norms load the same way on demand
-    (.nvd analog, FieldMaskingSpanQuery path)."""
-    rows = {
-        r.term: {"df": r.df, "ttf": r.ttf,
-                 "blocks": [b.asDict() if hasattr(b, "asDict") else b
-                            for b in r.blocks]}
-        for r in pdf.itertuples()
-    }
-    deleted = del_spec.deleted_for(seg_id) if del_spec is not None else None
-    loader = None
-    if norms_ctx is not None:
-        index_dir, seg_waves, multi_field = norms_ctx
-        max_doc = seg_meta[seg_id]
 
-        def loader(fld, _sid=seg_id, _md=max_doc):
+@dataclass(frozen=True)
+class _SegmentReader:
+    """Opens one live segment for one query inside the task that scores it
+    (SegmentReader analog): the query terms' posting rows, the segment's
+    deletes (.liv) and, on demand, full-field norms (.nvd) — all read with
+    pyarrow from the segment's own files, no SparkSession. Picklable: the
+    task closure carries a few ints per segment plus the query's terms."""
+
+    index_dir: str
+    max_docs: dict
+    del_spec: Optional[DeleteSpec]
+    multi_field: bool
+    terms: tuple
+    preds: tuple  # TermPredicateQuery nodes
+
+    def term_rows(self, segment_id: int, wave: int) -> dict:
+        """term -> {df, ttf, blocks} for the explicit terms plus every term of
+        the segment's dictionary a predicate node matches. The predicates are
+        the Python checks the kernel re-applies (TermPredicateQuery.matches),
+        so term selection has exactly the kernel's semantics."""
+        import pyarrow.parquet as pq
+
+        path = _segment_dir(self.index_dir, "postings", wave, segment_id)
+        if not os.path.isdir(path):
+            return {}
+        want = set(self.terms)
+        if self.preds:
+            dictionary = pq.read_table(path, columns=["term"]).column("term")
+            want.update(t for t in dictionary.to_pylist()
+                        if any(p.matches(t) for p in self.preds))
+        if not want:
+            return {}
+        # files are term-sorted: the IN filter prunes row groups
+        t = pq.read_table(path, columns=["term", "df", "ttf", "blocks"],
+                          filters=[("term", "in", sorted(want))])
+        return {r.pop("term"): r for r in t.to_pylist()}
+
+    def open(self, segment_id: int, wave: int) -> "K.SegmentIndex":
+        max_doc = self.max_docs[segment_id]
+        deleted = (self.del_spec.deleted_for(segment_id)
+                   if self.del_spec is not None else None)
+
+        def norms(fld):
             return load_segment_field_norms(
-                index_dir, seg_waves[_sid], _sid, fld, _md, multi_field)
-    return K.SegmentIndex(rows, seg_meta[seg_id], deleted=deleted,
-                          norms_loader=loader)
+                self.index_dir, wave, segment_id, fld, max_doc,
+                self.multi_field)
+        return K.SegmentIndex(self.term_rows(segment_id, wave), max_doc,
+                              deleted=deleted, norms_loader=norms)
 
+    def keys(self, segment_id: int, wave: int, docids: np.ndarray) -> list:
+        """Stored keys of a few docids (the winners of this segment)."""
+        import pyarrow.parquet as pq
 
-def _segment_kernel_fn(query, seg_meta, stats_args, gdf, k, pruning, threshold,
-                       after=None, seg_ords=None, del_spec=None,
-                       norms_ctx=None):
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        seg_id = int(pdf["segment_id"].iloc[0])
-        stats = _make_stats(stats_args)
-        seg = _make_segment_index(pdf, seg_id, seg_meta, del_spec, norms_ctx)
-        if after is None:
-            d, s, hits, exact = K.segment_top_k(
-                seg, stats, gdf, query, k, pruning=pruning,
-                total_hits_threshold=threshold)
-        else:
-            qq = K._push_boost(query, 1.0)
-            scorer = K.Scorer(seg, stats, gdf)
-            d, s = scorer.eval_scored(qq)
-            hits, exact = int(d.size), True
-            a_score, a_ord, a_doc = after
-            my_ord = seg_ords[seg_id]
-            sf = s.astype(np.float64)
-            keep = (sf < a_score) | (
-                (sf == a_score)
-                & ((my_ord > a_ord) | ((my_ord == a_ord) & (d > a_doc)))
-            )
-            d, s = K.top_k_from_scored(d[keep], s[keep], k)
-        return pd.DataFrame(
-            {
-                "segment_id": np.full(d.size, seg_id, dtype=np.int32),
-                "docid": d.astype(np.int32),
-                "score": s.astype(np.float64),
-                "hits": np.full(d.size, hits, dtype=np.int64),
-                "exact": np.full(d.size, exact, dtype=bool),
-            }
-        )
-
-    return fn
+        if not docids.size:
+            return []
+        t = pq.read_table(
+            _segment_dir(self.index_dir, "docs", wave, segment_id),
+            columns=["docid", "key"],
+            filters=[("docid", "in", [int(d) for d in docids])])
+        found = dict(zip(t.column("docid").to_pylist(),
+                         t.column("key").to_pylist()))
+        return [found.get(int(d)) for d in docids]
 
 
 class IndexSearcher:
@@ -253,6 +271,14 @@ class IndexSearcher:
             spark, index_dir, "postings", self.segments)
         self._docs = read_live_partitions(
             spark, index_dir, "docs", self.segments)
+        # the per-query fan-out input: one local row per live segment, so the
+        # map has min(#segments, defaultParallelism) partitions and building
+        # it runs no job. From pandas (Arrow) it is a LocalTableScan; a list
+        # of tuples would become a Python-RDD scan, one more Python worker
+        # round trip per task.
+        self._segments_df = spark.createDataFrame(
+            pd.DataFrame(live, columns=["wave", "segment_id"],
+                         dtype=np.int32))
 
     # --- term dictionary ----------------------------------------------------
     def postings_df(self) -> DataFrame:
@@ -606,36 +632,26 @@ class IndexSearcher:
             return cond
         raise ValueError(p.kind)
 
-    def _term_scan(self, q: Q.Query) -> DataFrame:
-        """Postings scan filtered to exactly what the query needs: explicit
-        terms via IN (row-group pruned by the term sort) OR'd with pushed-down
-        predicate filters for TermPredicateQuery nodes."""
-        terms = Q.collect_terms(q)
-        preds = Q.collect_predicates(q)
-        cond = F.col("term").isin(list(terms)) if terms else F.lit(False)
-        for p in preds:
-            cond = cond | self._predicate_col(p)
-        return self._postings.where(cond)
-
     def _global_stats(self, terms) -> dict:
         """Cross-segment (docFreq, totalTermFreq) per term (TermStates
         resolution). Memoized: the term-dict lookup is the per-query driver
         round-trip, so repeated terms across queries hit the cache
         (LRUQueryCache-adjacent, but for stats; the index is immutable per
-        searcher so no invalidation). Both stats ride the same aggregation —
-        ttf costs nothing extra and LM/DFR similarities need it."""
+        searcher so no invalidation). First-seen terms cost one JVM-only scan
+        of their per-segment rows, summed here — no shuffle, and no Python
+        worker (whose fixed cost dwarfs a few rows). Both stats ride the same
+        scan — ttf costs nothing extra and LM/DFR similarities need it."""
         if not terms:
             return {}
         missing = [t for t in terms if t not in self._df_cache]
         if missing:
-            rows = (
-                self._postings.where(F.col("term").isin(missing))
-                .groupBy("term").agg(F.sum("df").alias("df"),
-                                     F.sum("ttf").alias("ttf")).collect()
-            )
-            found = {r["term"]: (int(r["df"]), int(r["ttf"])) for r in rows}
-            for t in missing:
-                self._df_cache[t] = found.get(t, (0, 0))
+            rows = (self._postings.where(F.col("term").isin(missing))
+                    .select("term", "df", "ttf").collect())
+            found = dict.fromkeys(missing, (0, 0))
+            for r in rows:
+                df, ttf = found[r["term"]]
+                found[r["term"]] = (df + int(r["df"]), ttf + int(r["ttf"]))
+            self._df_cache.update(found)
         return {t: self._df_cache[t] for t in terms}
 
     def _global_df(self, terms) -> dict:
@@ -660,6 +676,27 @@ class IndexSearcher:
         return d
 
     # --- entry points ---------------------------------------------------------
+    def _reader(self, q: Q.Query) -> _SegmentReader:
+        return _SegmentReader(
+            self._index_dir, self.seg_meta, self._del_spec, self.multi_field,
+            tuple(sorted(Q.collect_terms(q))),
+            tuple(Q.collect_predicates(q)))
+
+    def _fan_out(self, q: Q.Query, per_segment, schema) -> DataFrame:
+        """The per-leaf map (IndexSearcher.java:221-296): every live segment
+        runs `per_segment(reader, segment_id, wave) -> pd.DataFrame` in a
+        task that reads the segment itself — one stage, no Exchange. Segments
+        holding none of the query's terms run too (MatchAll / MUST_NOT
+        shapes match there)."""
+        reader = self._reader(q)
+
+        def fn(batches):
+            for pdf in batches:
+                for wave, sid in zip(pdf["wave"], pdf["segment_id"]):
+                    yield per_segment(reader, int(sid), int(wave))
+
+        return self._segments_df.mapInPandas(fn, schema)
+
     def search(self, q: Q.Query, k: int = 10, pruning: bool = True,
                total_hits_threshold: int = K.TOTAL_HITS_THRESHOLD,
                after: Optional[tuple] = None, fetch_keys: bool = True) -> TopDocs:
@@ -673,38 +710,58 @@ class IndexSearcher:
             return self._match_all_top_k(q, k, fetch_keys)
         terms = Q.collect_terms(q)
         gdf = self._global_df(terms)
-        scan = self._term_scan(q)
-        fn = _segment_kernel_fn(
-            q, self.seg_meta, self._stats_args(terms), gdf, k, pruning,
-            total_hits_threshold,
-            after=after, seg_ords=self.seg_ords if after else None,
-            del_spec=self._del_spec, norms_ctx=self._norms_ctx())
-        out = scan.groupBy("segment_id").applyInPandas(fn, _KERNEL_OUT).toPandas()
-        per_seg_hits = out.drop_duplicates("segment_id")[["hits", "exact"]] \
-            if len(out) else pd.DataFrame(columns=["hits", "exact"])
-        total = int(per_seg_hits["hits"].sum()) if len(per_seg_hits) else 0
-        exact = bool(per_seg_hits["exact"].all()) if len(per_seg_hits) else True
+        stats_args = self._stats_args(terms)
+        seg_ords = self.seg_ords
+
+        def top_k(reader, seg_id, wave):
+            seg = reader.open(seg_id, wave)
+            stats = _make_stats(stats_args)
+            if after is None:
+                d, s, hits, exact = K.segment_top_k(
+                    seg, stats, gdf, q, k, pruning=pruning,
+                    total_hits_threshold=total_hits_threshold)
+            else:
+                scorer = K.Scorer(seg, stats, gdf)
+                d, s = scorer.eval_scored(K._push_boost(q, 1.0))
+                hits, exact = int(d.size), True
+                a_score, a_ord, a_doc = after
+                my_ord = seg_ords[seg_id]
+                sf = s.astype(np.float64)
+                keep = (sf < a_score) | (
+                    (sf == a_score)
+                    & ((my_ord > a_ord) | ((my_ord == a_ord) & (d > a_doc)))
+                )
+                d, s = K.top_k_from_scored(d[keep], s[keep], k)
+            return pd.DataFrame({
+                "segment_id": np.full(d.size, seg_id, dtype=np.int32),
+                "docid": d.astype(np.int32),
+                "score": s.astype(np.float64),
+                "hits": np.full(d.size, hits, dtype=np.int64),
+                "exact": np.full(d.size, exact, dtype=bool),
+                "key": (reader.keys(seg_id, wave, d) if fetch_keys
+                        else [None] * d.size),
+            })
+
+        out = self._fan_out(q, top_k, _HIT_OUT).toPandas()
+        per_seg_hits = out.drop_duplicates("segment_id")[["hits", "exact"]]
+        total = int(per_seg_hits["hits"].sum())
+        exact = bool(per_seg_hits["exact"].all())
         merged = K.merge_top_k(
             [
                 (int(sid), g["docid"].values, g["score"].values)
                 for sid, g in out.groupby("segment_id")
             ],
             k,
-            seg_ords=self.seg_ords,
+            seg_ords=seg_ords,
         )
         hits = pd.DataFrame(merged, columns=["segment_id", "docid", "score"])
         hits.insert(0, "rank", np.arange(1, len(hits) + 1))
         if fetch_keys:
-            if len(hits):
-                hits = self._attach_keys(hits)
-            else:
-                hits = hits.reindex(
-                    columns=["rank", "segment_id", "docid", "key", "score"])
+            key_of = dict(zip(zip(out["segment_id"], out["docid"]),
+                              out["key"]))
+            hits.insert(3, "key", [key_of[sd] for sd in
+                                   zip(hits["segment_id"], hits["docid"])])
         return TopDocs(hits, total, exact)
-
-    def _norms_ctx(self):
-        """Closure-safe context for task-local full-field norm reads."""
-        return (self._index_dir, self._seg_waves, self.multi_field)
 
     def _hidden_count(self, s: dict) -> int:
         """Docs of segment s this reader must not see (hard + hidden soft)."""
@@ -813,8 +870,9 @@ class IndexSearcher:
 
     def _match_all_top_k(self, q, k, fetch_keys):
         boost = q.boost if hasattr(q, "boost") else 1.0
+        cols = ["segment_id", "docid"] + (["key"] if fetch_keys else [])
         first = (
-            self._live_docs_df().select("segment_id", "docid")
+            self._live_docs_df().select(*cols)
             .orderBy("segment_id", "docid").limit(k).toPandas()
         )
         first["score"] = float(np.float32(boost)) if self.dtype == np.float32 \
@@ -822,49 +880,19 @@ class IndexSearcher:
         first.insert(0, "rank", np.arange(1, len(first) + 1))
         total = sum(s["max_doc"] - self._hidden_count(s)
                     for s in self.segments)
-        if fetch_keys and len(first):
-            first = self._attach_keys(first)
         return TopDocs(first, int(total), True)
-
-    def _attach_keys(self, hits: pd.DataFrame) -> pd.DataFrame:
-        pairs = [F.struct(F.lit(int(r.segment_id)), F.lit(int(r.docid)))
-                 for r in hits.itertuples()]
-        keys = (
-            self._docs.where(
-                F.struct(F.col("segment_id").cast("int"),
-                         F.col("docid").cast("int")).isin(pairs))
-            .select("segment_id", "docid", "key").toPandas()
-        )
-        out = hits.merge(keys, on=["segment_id", "docid"], how="left")
-        return out[["rank", "segment_id", "docid", "key", "score"]]
 
     def explain(self, q: Q.Query, segment_id: int, docid: int) -> dict:
         """IndexSearcher.explain analog: score decomposition tree for one hit.
 
-        Driver-side: pulls only the query terms' posting rows of ONE segment
-        (partition-pruned), then runs the kernel's explain — the value is
+        Driver-side: opens ONE segment with the same reader the search tasks
+        use (no Spark job), then runs the kernel's explain — the value is
         bit-identical to the score search() would produce for that doc."""
         q = self._expand_query(q)
         terms = Q.collect_terms(q)
         gdf = self._global_df(terms)
-        rows = (
-            self._term_scan(q)
-            .where(F.col("segment_id") == segment_id).collect()
-        )
-        term_rows = {
-            r["term"]: {"df": r["df"], "ttf": r["ttf"],
-                        "blocks": [b.asDict() for b in r["blocks"]]}
-            for r in rows
-        }
         stats = _make_stats(self._stats_args(terms))
-        deleted = (self._del_spec.deleted_for(segment_id)
-                   if self._del_spec is not None else None)
-        index_dir, seg_waves, multi_field = self._norms_ctx()
-        seg = K.SegmentIndex(
-            term_rows, self.seg_meta[segment_id], deleted=deleted,
-            norms_loader=lambda fld: load_segment_field_norms(
-                index_dir, seg_waves[segment_id], segment_id, fld,
-                self.seg_meta[segment_id], multi_field))
+        seg = self._reader(q).open(segment_id, self._seg_waves[segment_id])
         return K.explain(seg, stats, gdf, q, docid)
 
     def count(self, q: Q.Query) -> int:
@@ -892,24 +920,17 @@ class IndexSearcher:
         terms = Q.collect_terms(q)
         gdf = self._global_df(terms)
         stats_args = self._stats_args(terms)
-        seg_meta = self.seg_meta
-        del_spec = self._del_spec
-        norms_ctx = self._norms_ctx()
 
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            seg_id = int(pdf["segment_id"].iloc[0])
-            stats = _make_stats(stats_args)
-            seg = _make_segment_index(pdf, seg_id, seg_meta, del_spec,
-                                      norms_ctx)
-            scorer = K.Scorer(seg, stats, gdf)
+        def match(reader, seg_id, wave):
+            scorer = K.Scorer(reader.open(seg_id, wave),
+                              _make_stats(stats_args), gdf)
             d = scorer.eval_match(K._push_boost(q, 1.0))
             return pd.DataFrame({
                 "segment_id": np.full(d.size, seg_id, dtype=np.int32),
                 "docid": d.astype(np.int32),
             })
 
-        scan = self._term_scan(q)
-        return scan.groupBy("segment_id").applyInPandas(fn, _MATCH_OUT)
+        return self._fan_out(q, match, _MATCH_OUT)
 
     def scores_df(self, q: Q.Query) -> DataFrame:
         """Distributed exhaustive (segment_id, docid, score) — the bulk-scoring
@@ -918,22 +939,10 @@ class IndexSearcher:
         terms = Q.collect_terms(q)
         gdf = self._global_df(terms)
         stats_args = self._stats_args(terms)
-        seg_meta = self.seg_meta
-        del_spec = self._del_spec
-        norms_ctx = self._norms_ctx()
 
-        out_schema = T.StructType([
-            T.StructField("segment_id", T.IntegerType(), False),
-            T.StructField("docid", T.IntegerType(), False),
-            T.StructField("score", T.DoubleType(), False),
-        ])
-
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            seg_id = int(pdf["segment_id"].iloc[0])
-            stats = _make_stats(stats_args)
-            seg = _make_segment_index(pdf, seg_id, seg_meta, del_spec,
-                                      norms_ctx)
-            scorer = K.Scorer(seg, stats, gdf)
+        def score(reader, seg_id, wave):
+            scorer = K.Scorer(reader.open(seg_id, wave),
+                              _make_stats(stats_args), gdf)
             d, s = scorer.eval_scored(K._push_boost(q, 1.0))
             return pd.DataFrame({
                 "segment_id": np.full(d.size, seg_id, dtype=np.int32),
@@ -941,5 +950,4 @@ class IndexSearcher:
                 "score": s.astype(np.float64),
             })
 
-        scan = self._term_scan(q)
-        return scan.groupBy("segment_id").applyInPandas(fn, out_schema)
+        return self._fan_out(q, score, _SCORE_OUT)

@@ -212,3 +212,35 @@ def test_checkindex_validates_offsets(spark, off_index):
     from lucene_7_x_9_x_spark.index.checkindex import check_index
     idx, _ = off_index
     assert check_index(spark, idx) == []
+
+
+def test_merge_refuses_mixed_offsets_channels(spark, off_index, tmp_path):
+    """A segment without the offsets channel decodes all-zero offsets; the
+    merge must refuse rather than store them as real (0, 0) offsets."""
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lucene_7_x_9_x_spark.index.catalog import IndexCatalog
+    from lucene_7_x_9_x_spark.index.merge import execute_merge
+    idx0, _ = off_index
+    idx = str(tmp_path / "idx_mixed")
+    shutil.copytree(idx0, idx)
+    segs = IndexCatalog(idx).live_segments()
+    first = segs[0]
+    seg_dir = os.path.join(idx, "postings", f"wave={first['wave']}",
+                           f"segment_id={first['segment_id']}")
+    for path in glob.glob(os.path.join(seg_dir, "*.parquet")):
+        t = pq.read_table(path)
+        rows = t.to_pylist()
+        for r in rows:
+            for b in r["blocks"]:
+                b["off_bytes"] = None
+        pq.write_table(pa.Table.from_pylist(rows, schema=t.schema), path)
+        crc = os.path.join(seg_dir, f".{os.path.basename(path)}.crc")
+        if os.path.exists(crc):  # the rewrite invalidates Hadoop's checksum
+            os.remove(crc)
+    with pytest.raises(Exception, match="offsets channel"):
+        execute_merge(spark, idx, [s["segment_id"] for s in segs])
